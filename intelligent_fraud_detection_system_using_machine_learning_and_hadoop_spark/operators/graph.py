@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import broadcast_threshold_bytes
+
 
 def _canonical(e: DataFrame) -> DataFrame:
     """Undirected canonical edge form: u < v, no self-loops, distinct."""
@@ -100,30 +102,6 @@ def _sized_partitions_ckpt(df: DataFrame, scale: float = 1.0, cap: int = 2048):
         return None
     need = math.ceil(b * scale / _CKPT_BYTES_PER_PARTITION)
     return min(cap, need) if need > base else None
-
-
-def _broadcast_threshold_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (0 when
-    disabled): the same bar Catalyst applies to stats-known relations,
-    reused by the auto frontier-strategy switch so 'would Spark
-    broadcast this?' has one answer engine-wide."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    if raw.startswith("-"):
-        return 0
-    mult = 1
-    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                   ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                   ("b", 1)):
-        if raw.endswith(suf):
-            raw = raw[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return 10 * (1 << 20)
 
 
 def _edge_signature(e: DataFrame):
@@ -1023,7 +1001,7 @@ def shortest_paths(
         .select("id", F.lit(0).cast("long").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    bc_cap = min(_broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
+    bc_cap = min(broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
     if broadcast_frontier is None:
         # auto: ONE exact node count bounds every frontier (frontier ⊆
         # nodes); 32 B/row over-estimates the two-long broadcast rows.
@@ -1704,7 +1682,7 @@ def temporal_reachability(
         .select("node", F.lit(0).cast("long").alias("arrive_t"))
         .localCheckpoint(eager=True)
     )
-    bc_cap = min(_broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
+    bc_cap = min(broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
     if broadcast_frontier is None:
         use_broadcast = 0 < nodes.count() * 32 <= bc_cap
     else:

@@ -40,9 +40,11 @@ def train(
     ``distributed=False`` is bit-for-bit reference parity
     (``train.py:64-81``: in-memory minibatch Adam on the driver —
     correct at the reference's 30–10k-row scale). ``distributed=True``
-    switches to the data-parallel trainer (gradients merged across
-    executors via mapInPandas; features never leave the cluster) — the
-    setting for any corpus that doesn't fit one machine."""
+    switches to full-batch Adam over the features DataFrame: features
+    of at most ``ml.autoencoder._DRIVER_FIT_MAX_BYTES`` are collected
+    once and trained on the driver, larger ones stay on the executors
+    and only per-partition gradients travel — the setting for any
+    corpus that doesn't fit one machine."""
     from .ml.autoencoder import train_autoencoder_distributed
 
     pre, feats = fit_preprocessor(claims)

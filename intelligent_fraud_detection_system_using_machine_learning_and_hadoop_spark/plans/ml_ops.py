@@ -115,12 +115,13 @@ def anomaly_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("anomaly_autoencoder")
 def anomaly_autoencoder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4/M5 at scale: seeded autoencoder (64→32→64, Adam, MSE) trained
-    DATA-PARALLEL — per epoch each partition computes sum-gradients over
-    its rows via Arrow-batched mapInPandas, the driver merges the
-    (n_params)-sized partials and applies one Adam step; the feature
-    matrix never leaves the executors (vs the reference's in-memory
-    ``train.py:64-81``). Scoring broadcasts the weights back out.
-    Deterministic for a fixed partitioning (rows-only)."""
+    full-batch — per epoch each partition's sum-gradients merge in pid
+    order and one Adam step follows. A feature matrix of at most
+    ``_DRIVER_FIT_MAX_BYTES`` is collected once and trained on the driver
+    (the reference's in-memory ``train.py:64-81`` scale); a larger one
+    trains with one mapInPandas job per epoch and never leaves the
+    executors. Scoring broadcasts the weights back out. Deterministic
+    for a fixed partitioning (rows-only)."""
     from ..ml.autoencoder import autoencoder_scores, train_autoencoder_distributed
 
     feats = _orders_features(spark, sf_dir).select("o_orderkey", "features")

@@ -28,6 +28,31 @@ def enable_nanos_reads(spark: SparkSession) -> None:
         spark.conf.set(key, "true")
 
 
+def broadcast_threshold_bytes(spark: SparkSession) -> int:
+    """The session's autoBroadcastJoinThreshold in bytes (0 when
+    disabled): the same bar Catalyst applies to stats-known relations.
+    Engine-side "would Spark broadcast this?" decisions (the graph
+    frontier-strategy switch) read it here, so that question has one
+    answer engine-wide."""
+    raw = str(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    ).strip().lower()
+    if raw.startswith("-"):
+        return 0
+    mult = 1
+    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
+                   ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
+                   ("b", 1)):
+        if raw.endswith(suf):
+            raw = raw[: -len(suf)]
+            mult = m
+            break
+    try:
+        return int(raw) * mult
+    except ValueError:
+        return 10 * (1 << 20)
+
+
 def get_spark(app_name: str = "ifds-spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 

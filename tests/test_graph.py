@@ -1027,14 +1027,16 @@ class TestShortestPathsFrontierStrategy:
         hash-join side (threshold parser returns 0) and still relax
         correctly."""
         from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
-            _broadcast_threshold_bytes,
             shortest_paths,
+        )
+        from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.session import (
+            broadcast_threshold_bytes,
         )
 
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            assert _broadcast_threshold_bytes(spark) == 0
+            assert broadcast_threshold_bytes(spark) == 0
             e = spark.createDataFrame(
                 [(1, 2, 5), (2, 3, 7)], "id_a long, id_b long, w long"
             )
@@ -1048,8 +1050,8 @@ class TestShortestPathsFrontierStrategy:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
     def test_threshold_parser_units(self, spark):
-        from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
-            _broadcast_threshold_bytes,
+        from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.session import (
+            broadcast_threshold_bytes,
         )
 
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1062,7 +1064,7 @@ class TestShortestPathsFrontierStrategy:
                 ("-1", 0),
             ):
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
-                assert _broadcast_threshold_bytes(spark) == want, raw
+                assert broadcast_threshold_bytes(spark) == want, raw
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import datetime as dt
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -334,6 +335,22 @@ def test_streaming_sessions_subset_of_batch(spark, sf_dir):
     assert len(batch) - len(emitted) <= e.select("user_id").distinct().count()
 
 
+@contextmanager
+def _executor_fit():
+    """Driver-fit size gate at 0 bytes for the block: the distributed
+    autoencoder fit then takes its per-epoch executor path."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml import (
+        autoencoder,
+    )
+
+    old = autoencoder._DRIVER_FIT_MAX_BYTES
+    try:
+        autoencoder._DRIVER_FIT_MAX_BYTES = 0
+        yield
+    finally:
+        autoencoder._DRIVER_FIT_MAX_BYTES = old
+
+
 def test_distributed_training_reduces_loss_and_scores(spark, sf_dir):
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.autoencoder import (
         autoencoder_scores,
@@ -344,7 +361,8 @@ def test_distributed_training_reduces_loss_and_scores(spark, sf_dir):
     )
 
     feats = _orders_features(spark, sf_dir).select("o_orderkey", "features")
-    model, losses = train_autoencoder_distributed(feats, epochs=12, lr=1e-2)
+    with _executor_fit():  # the per-epoch executor path
+        model, losses = train_autoencoder_distributed(feats, epochs=12, lr=1e-2)
     # full-batch Adam on a reconstruction task must make real progress
     assert losses[-1] < 0.7 * losses[0], losses
     # and the trained weights score distributed like any other model
@@ -373,15 +391,119 @@ def test_distributed_training_tree_merge_matches_flat(spark, sf_dir):
         .select("o_orderkey", "features")
         .repartition(8)
     )
-    m_flat, l_flat = train_autoencoder_distributed(
-        feats, epochs=3, lr=1e-2, driver_fan_in=64
-    )
-    m_tree, l_tree = train_autoencoder_distributed(
-        feats, epochs=3, lr=1e-2, driver_fan_in=2
-    )
+    with _executor_fit():  # the per-epoch executor path
+        m_flat, l_flat = train_autoencoder_distributed(
+            feats, epochs=3, lr=1e-2, driver_fan_in=64
+        )
+        m_tree, l_tree = train_autoencoder_distributed(
+            feats, epochs=3, lr=1e-2, driver_fan_in=2
+        )
     np.testing.assert_allclose(l_tree, l_flat, rtol=1e-9)
     for a, b in zip(m_flat.params(), m_tree.params()):
         np.testing.assert_allclose(a, b, rtol=1e-7, atol=1e-10)
+
+
+def test_distributed_training_driver_fit_matches_executor_fit(spark, sf_dir):
+    """Below the driver-fit size gate the fit collects the features once
+    and runs every epoch on the driver; it must reproduce the per-epoch
+    executor fit (same partials, same pid-order merge) to the tree-vs-
+    flat tolerances."""
+    import numpy as np
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.autoencoder import (
+        train_autoencoder_distributed,
+    )
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.plans.ml_ops import (
+        _orders_features,
+    )
+
+    feats = _orders_features(spark, sf_dir).select("o_orderkey", "features")
+    m_drv, l_drv = train_autoencoder_distributed(feats, epochs=3, lr=1e-2)
+    with _executor_fit():
+        m_exe, l_exe = train_autoencoder_distributed(feats, epochs=3, lr=1e-2)
+    np.testing.assert_allclose(l_drv, l_exe, rtol=1e-9)
+    for a, b in zip(m_exe.params(), m_drv.params()):
+        np.testing.assert_allclose(a, b, rtol=1e-7, atol=1e-10)
+
+
+def test_distributed_training_driver_fit_job_count_is_epoch_free(spark, sf_dir):
+    """The driver-side fit launches its setup and collect jobs once; no
+    Spark job runs per epoch."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.autoencoder import (
+        train_autoencoder_distributed,
+    )
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.plans.ml_ops import (
+        _orders_features,
+    )
+
+    feats = _orders_features(spark, sf_dir).select("o_orderkey", "features")
+    feats.count()  # materialize the feature cache outside the groups
+    jobs = {
+        epochs: _fit_job_count(spark, train_autoencoder_distributed, feats, epochs)
+        for epochs in (1, 15)
+    }
+    assert jobs[1] > 0, jobs
+    assert jobs[15] == jobs[1], jobs
+
+
+def _fit_job_count(spark, fit, feats, epochs):
+    """Spark jobs one ``fit(feats, epochs=epochs)`` call launches."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ae_fit_{uuid.uuid4().hex}"  # group job ids outlive the call
+    try:
+        sc.setJobGroup(group, "autoencoder fit")
+        fit(feats, epochs=epochs)
+        return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_distributed_training_size_gate_boundary(spark, sf_dir):
+    """A feature matrix of exactly ``_DRIVER_FIT_MAX_BYTES`` (rows ×
+    width × 8) fits on the driver; one byte more takes the per-epoch
+    executor path."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml import (
+        autoencoder,
+    )
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.plans.ml_ops import (
+        _orders_features,
+    )
+
+    feats = _orders_features(spark, sf_dir).select("o_orderkey", "features")
+    size = feats.count() * len(feats.first()["features"]) * 8
+    fit = autoencoder.train_autoencoder_distributed
+    old = autoencoder._DRIVER_FIT_MAX_BYTES
+    try:
+        autoencoder._DRIVER_FIT_MAX_BYTES = size
+        at_gate = [_fit_job_count(spark, fit, feats, e) for e in (1, 3)]
+        autoencoder._DRIVER_FIT_MAX_BYTES = size - 1
+        above = [_fit_job_count(spark, fit, feats, e) for e in (1, 3)]
+    finally:
+        autoencoder._DRIVER_FIT_MAX_BYTES = old
+    assert at_gate[0] == at_gate[1], at_gate
+    assert above[1] - above[0] == 2, above  # one job per extra epoch
+
+
+def test_distributed_training_empty_input_releases_its_cache(spark):
+    """Empty input raises, and the persisted feature array is released
+    on the way out."""
+    from pyspark.ml.linalg import VectorUDT
+    from pyspark.sql import types as T
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.autoencoder import (
+        train_autoencoder_distributed,
+    )
+
+    empty = spark.createDataFrame(
+        [], T.StructType([T.StructField("features", VectorUDT())])
+    )
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(ValueError):
+        train_autoencoder_distributed(empty, epochs=2)
+    assert persistent().size() == before
 
 
 def test_score_is_one_lazy_plan_after_model_load(spark, tmp_path):

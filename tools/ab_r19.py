@@ -166,6 +166,9 @@ def temporal_old(edges, seeds, rounds=4):
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators import (
         graph as g,
     )
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.session import (
+        broadcast_threshold_bytes,
+    )
 
     e = temporal_old_edges_build(edges).localCheckpoint(eager=True)
     nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
@@ -176,7 +179,7 @@ def temporal_old(edges, seeds, rounds=4):
         .select("node", F.lit(0).cast("long").alias("arrive_t"))
         .localCheckpoint(eager=True)
     )
-    bc_cap = min(g._broadcast_threshold_bytes(edges.sparkSession), g._FRONTIER_BC_CAP)
+    bc_cap = min(broadcast_threshold_bytes(edges.sparkSession), g._FRONTIER_BC_CAP)
     use_broadcast = 0 < nodes.count() * 32 <= bc_cap
     frontier = arr
     for _ in range(rounds):
